@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** True sample median — averages the two middle elements for even
@@ -35,7 +34,10 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     burn() // JIT warmup
-    val solo = burn()
+    // Best of five solo burns: a solo burn slowed by another thread of a
+    // shared JVM (a test suite, a neighbor's job) would inflate n·solo/wall
+    // past n; the fastest one is the uncontended single-core speed.
+    val solo = Seq.fill(5)(burn()).min
     val t0 = System.nanoTime()
     val threads = (1 to n).map(_ => new Thread(() => { burn(); () }))
     threads.foreach(_.start()); threads.foreach(_.join())
@@ -44,28 +46,17 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // Fixed name order: hash-Map iteration reshuffles whenever a query is
+    // added, which silently changes warm-cache adjacency between rounds.
+    // Optional args = query-name subset for scoped re-timing (the full
+    // sweep remains the number of record; a subset skips the sweep's
+    // memory-pressure adjacency, so use it for triage, not PERF rows).
+    val ordered = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // Weather probe BEFORE the sweep (and again after — a 12-minute sweep
     // can cross a weather change): effective cores at full fan-out.
     val ecBefore = effectiveCores()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100 generated classes: with ~100 declared
-      // queries the warmup pass's compiled plans are evicted before the
-      // timed pass reaches them, silently re-measuring Janino compilation
-      // instead of execution (r04: c1 10.7 s timed vs 2.6 s steady-state).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // ContextCleaner reclaims broadcasts/shuffle state only after a GC
-      // notices the weak refs; a 100+-query sweep otherwise accumulates
-      // until the old gen fills and full-GC storms multiply later queries'
-      // wall time (default interval 30min never fires in a sweep).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     // Warmup phase: read every table family once, then run EVERY query once
     // un-timed. A query's first execution pays Catalyst + Janino whole-stage
     // codegen compilation and JVM JIT (measured at 0.3-1.5 s per query —
@@ -79,14 +70,6 @@ object Bench {
       graft.queries.Tables.events(spark, sfDir).count()
       SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
-    // Fixed name order: hash-Map iteration reshuffles whenever a query is
-    // added, which silently changes warm-cache adjacency between rounds.
-    // Optional args = query-name subset for scoped re-timing (the full
-    // sweep remains the number of record; a subset skips the sweep's
-    // memory-pressure adjacency, so use it for triage, not PERF rows).
-    val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered =
-      if (args.isEmpty) ordered0 else ordered0.filter(q => args.contains(q._1))
     // Warmup durations double as an anomaly yardstick for the timed phase:
     // warmup pays Janino + JIT on top of execution, so a TIMED pass that
     // comes out slower than its own warmup means the timed phase is being
@@ -164,14 +147,15 @@ object Bench {
         val spread = ok2.size == 2 && ok2.max > 2 * ok2.min
         val overWarmup = ok2.nonEmpty &&
           warmupDt.get(name).exists(w => ok2.min > 1.2 * w && ok2.min - w > 0.25)
-        if (spread || overWarmup) { System.gc(); two :+ onePass() }
         // Expensive queries always get a THIRD pass (min-of-3): the top-20
         // queries carry most of the sweep total, so their single-pass noise
         // dominates every round-over-round comparison (r21 verdict item 7:
         // single cold pairs kept burning judge/builder time on weather
         // attribution). Additions-only — more passes can only firm up the
-        // min; the timed region and the JSON contract are unchanged.
-        else if (ok2.nonEmpty && ok2.min > 1.5) two :+ onePass()
+        // min; the timed region and the JSON contract are unchanged. Both
+        // third-pass paths start from the same drained heap.
+        val expensive = ok2.nonEmpty && ok2.min > 1.5
+        if (spread || overWarmup || expensive) { System.gc(); two :+ onePass() }
         else two
       }
       // min over SUCCESSFUL passes only — a transient failure's

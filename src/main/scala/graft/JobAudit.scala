@@ -12,15 +12,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * lifecycles, micro-batch machinery) show up here as job counts that dwarf
   * the data volume; a data-bound query shows a handful of jobs.
   *
-  * Run: sbt "runMain graft.JobAudit <query> [query...]";
+  * Run: sbt "runMain graft.JobAudit [query...]" (no names: every query);
   * SPARK_GRAFT_SF_DIR picks the scale (default sf0.1).
   */
 object JobAudit {
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.select(args.toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -36,8 +35,7 @@ object JobAudit {
         ()
       }
     })
-    args.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    selected.foreach { case (name, fn) =>
       // Warm pass: Catalyst + Janino + JIT, so the audited pass counts the
       // steady-state jobs, not compilation side jobs.
       try fn(spark, dir).write.format("noop").mode("overwrite").save()

@@ -33,9 +33,62 @@ object ScaleProbe {
     val qArgs = args.filterNot(a => a == "--deep" || a == "--deep4").toSeq
     require((!deep && !deep4) || qArgs.nonEmpty,
       "--deep/--deep4 need explicit query names")
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(if (qArgs.nonEmpty) qArgs
+      else Seq("d2_minhash_lsh", "d8_dup_clusters", "d19_keep_longest",
+        "c1_clean_corpus", "c2_cut_spans", "c4_cut_long_spans",
+        "t13_bpe_train", "t13b_bpe_batched", "t14_bpe_stream",
+        "d20_incremental_dedup", "d21_store_append",
+        "e10_multibatch_lifecycle",
+        // round-13/15 heavy ops (VERDICT r13 item 1): graph, store
+        // lifecycle, LM scoring, and the events-side long-history folds.
+        // The events replica makes every key's history 10x LONGER;
+        // ts3 probes the unchunked O(d^2) fold and ts8 the chunked form
+        // at its PRODUCTION chunk length (365 d). ts6/ts7's 7-day chunks
+        // are the oracle-gate config, not the scale config — at 44
+        // chunks the sequential job floor dominates (measured 59 s at
+        // sf1 vs ts3's 6.5 s), so probing them here would measure the
+        // witness configuration, not the operator.
+        "d27_dup_pagerank", "d30_triangles", "t23_bigram_xent",
+        "b2_bm25_store", "b7_store_compaction",
+        "w5_concurrency", "ts3_ewma", "ts8_ewma_chunked_yearly",
+        // round-16 (VERDICT r15 item 6): direct 10x evidence for the two
+        // skew defenses — d31's anchor-frequency hub cap and the d22
+        // hot-only salted join (whose viral slice is quadratic BY
+        // CONSTRUCTION: 30% of a 10x corpus shares one text, so the pair
+        // set itself grows 100x — the probe measures the salted layout
+        // carrying that, not subquadratic magic).
+        "d31_longest_dup", "d22_skewed_dedup", "d32_decontam",
+        "o26_sequence_pack",
+        // round-17 (VERDICT r16 item 4): the exact-dedup guard must turn
+        // d22's by-construction-quadratic viral corpus ~linear — the
+        // pair set collapses to distinct texts before enumeration.
+        "d33_guarded_dedup",
+        // round-17 second wave: the packing family's manifest, token
+        // export, and streaming legs — all one-cumsum shapes that must
+        // track the token stream linearly.
+        "o27_pack_manifest", "o28_pack_tokens", "e20_stream_pack",
+        // round-17 third wave: the v-family's first direct scale
+        // evidence (embeddings replica) — the exact-vs-indexed decontam
+        // audits, the persisted-index build+search, and the delete leg.
+        "v25_semantic_decontam", "v26_ivf_decontam",
+        "v27_ann_store_delete", "v13_ivf_pq", "v17_ivf_store_search",
+        "d34_eval_dirtiness", "v28_sq8_search", "d35_containment",
+        // round-18: the containment removal + streaming probe (both ride
+        // d35's capped candidate chain — same expected slope), the
+        // sharded packed-window export (one-cumsum + bounded writer
+        // fan-out), and the auto-routed fold (its gate must route the
+        // 10x-longer replica histories CHUNKED — the probe measures the
+        // routed plan, with the one-row span aggregate riding along).
+        "c10_containment_drop", "e21_stream_containment",
+        "o29_pack_sharded", "ts9_ewma_auto", "ts10_cusum_auto",
+        "e22_containment_ingest",
+        // round-19: the self-extending ingest loop (e22 + per-window
+        // store extension + decision-store compaction) and the
+        // corpus-derived containment threshold (one extra ladder survey
+        // over d35's scored chain — same expected slope as c10).
+        "e23_containment_ingest_ext", "c11_containment_auto",
+        "c12_curation_pipeline"))
+    val spark = graft.engine.Session.local()
 
     /** mult-x documents replica (replica k suffixes every token with k,
       * so shingles/signatures stay distinct across replicas — the corpus
@@ -113,66 +166,10 @@ object ScaleProbe {
       println("WARNING: replica built THIS run — timings are contaminated" +
         " by the build job; re-run ScaleProbe for the publishable table")
     }
-    val names = if (qArgs.nonEmpty) qArgs
-      else Seq("d2_minhash_lsh", "d8_dup_clusters", "d19_keep_longest",
-        "c1_clean_corpus", "c2_cut_spans", "c4_cut_long_spans",
-        "t13_bpe_train", "t13b_bpe_batched", "t14_bpe_stream",
-        "d20_incremental_dedup", "d21_store_append",
-        "e10_multibatch_lifecycle",
-        // round-13/15 heavy ops (VERDICT r13 item 1): graph, store
-        // lifecycle, LM scoring, and the events-side long-history folds.
-        // The events replica makes every key's history 10x LONGER;
-        // ts3 probes the unchunked O(d^2) fold and ts8 the chunked form
-        // at its PRODUCTION chunk length (365 d). ts6/ts7's 7-day chunks
-        // are the oracle-gate config, not the scale config — at 44
-        // chunks the sequential job floor dominates (measured 59 s at
-        // sf1 vs ts3's 6.5 s), so probing them here would measure the
-        // witness configuration, not the operator.
-        "d27_dup_pagerank", "d30_triangles", "t23_bigram_xent",
-        "b2_bm25_store", "b7_store_compaction",
-        "w5_concurrency", "ts3_ewma", "ts8_ewma_chunked_yearly",
-        // round-16 (VERDICT r15 item 6): direct 10x evidence for the two
-        // skew defenses — d31's anchor-frequency hub cap and the d22
-        // hot-only salted join (whose viral slice is quadratic BY
-        // CONSTRUCTION: 30% of a 10x corpus shares one text, so the pair
-        // set itself grows 100x — the probe measures the salted layout
-        // carrying that, not subquadratic magic).
-        "d31_longest_dup", "d22_skewed_dedup", "d32_decontam",
-        "o26_sequence_pack",
-        // round-17 (VERDICT r16 item 4): the exact-dedup guard must turn
-        // d22's by-construction-quadratic viral corpus ~linear — the
-        // pair set collapses to distinct texts before enumeration.
-        "d33_guarded_dedup",
-        // round-17 second wave: the packing family's manifest, token
-        // export, and streaming legs — all one-cumsum shapes that must
-        // track the token stream linearly.
-        "o27_pack_manifest", "o28_pack_tokens", "e20_stream_pack",
-        // round-17 third wave: the v-family's first direct scale
-        // evidence (embeddings replica) — the exact-vs-indexed decontam
-        // audits, the persisted-index build+search, and the delete leg.
-        "v25_semantic_decontam", "v26_ivf_decontam",
-        "v27_ann_store_delete", "v13_ivf_pq", "v17_ivf_store_search",
-        "d34_eval_dirtiness", "v28_sq8_search", "d35_containment",
-        // round-18: the containment removal + streaming probe (both ride
-        // d35's capped candidate chain — same expected slope), the
-        // sharded packed-window export (one-cumsum + bounded writer
-        // fan-out), and the auto-routed fold (its gate must route the
-        // 10x-longer replica histories CHUNKED — the probe measures the
-        // routed plan, with the one-row span aggregate riding along).
-        "c10_containment_drop", "e21_stream_containment",
-        "o29_pack_sharded", "ts9_ewma_auto", "ts10_cusum_auto",
-        "e22_containment_ingest",
-        // round-19: the self-extending ingest loop (e22 + per-window
-        // store extension + decision-store compaction) and the
-        // corpus-derived containment threshold (one extra ladder survey
-        // over d35's scored chain — same expected slope as c10).
-        "e23_containment_ingest_ext", "c11_containment_auto",
-        "c12_curation_pipeline")
     val scales = Seq("sf0.1" -> base, "sf1" -> big) ++
       (if (deep) Seq("sf3" -> big30) else Nil) ++
       (if (deep4) Seq("sf10" -> big100) else Nil)
-    for (name <- names; (label, dir) <- scales) {
-      val fn = SparkEntry.queries(name)
+    for ((name, fn) <- selected; (label, dir) <- scales) {
       // one warmup (codegen/JIT), then min of two timed passes
       try {
         fn(spark, dir).write.format("noop").mode("overwrite").save()

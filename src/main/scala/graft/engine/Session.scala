@@ -2,65 +2,73 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
-  *
-  * Tuned for correctness-reproducibility (UTC, ANSI off so casts behave like
-  * the reference's permissive float parses) and for scale-minded defaults:
-  * AQE with skew-join handling on, nested-schema pruning on so queries that
-  * touch only scene metadata never deserialize the 343-px tensor arrays
-  * (reference analog: data_processor.py:48-51 reads only metadata groups).
+/** SparkSession factory for the graft engine: the one place graft's session
+  * setup lives. Every main, the test session and the benchmark runner get
+  * their session from [[local]]; a session built elsewhere gets the same
+  * runtime setup from [[prepare]].
   */
 object Session {
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
-    val b = SparkSession
-      .builder()
+
+  /** Every conf graft sets, read by both [[local]] (all of it, on the
+    * builder) and [[prepare]] (the runtime SQL confs). Tuned for
+    * correctness-reproducibility (UTC, ANSI off so casts behave like the
+    * reference's permissive float parses) and for scale-minded defaults:
+    * AQE with skew-join handling on, nested-schema pruning on so queries
+    * that touch only scene metadata never deserialize the 343-px tensor
+    * arrays (reference analog: data_processor.py:48-51 reads only metadata
+    * groups).
+    */
+  val confs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.optimizer.nestedSchemaPruning.enabled" -> "true",
+    "spark.sql.parquet.aggregatePushdown" -> "true",
+    "spark.sql.ansi.enabled" -> "false",
+    // Report per-bucket sort order from bucketed scans (off by default
+    // since 3.0 because it lists files at planning time). Bucketing.
+    // writeBucketed repartitions onto the bucket ids so every bucket is
+    // exactly ONE file — the layout this conf needs — and the payoff is
+    // the j8/d20 co-located joins dropping their residual per-bucket
+    // Sorts: the store side of an incremental-dedup join then runs
+    // scan→join with no Exchange AND no Sort.
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+    // Static conf, defaults to 100: a long-running engine serving ~100
+    // distinct plan shapes thrashes the generated-class cache at the
+    // default, re-paying Janino compilation (seconds per query) on every
+    // execution — in a sweep, the warmup pass's compiled plans would be
+    // evicted before the timed pass reaches them (r04: c1 10.7 s timed vs
+    // 2.6 s steady-state). Sized for the full declared surface with headroom.
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
+    // ContextCleaner reclaims broadcasts/shuffle state only after a GC
+    // notices the weak refs; a 100+-query sweep otherwise accumulates
+    // until the old gen fills and full-GC storms multiply later queries'
+    // wall time (the 30min default never fires in a sweep).
+    "spark.cleaner.periodicGC.interval" -> "2min")
+
+  /** `SPARK_GRAFT_CPUS`, or every core of this machine when unset. */
+  private def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  def local(cpus: String = defaultCpus): SparkSession = {
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // Report per-bucket sort order from bucketed scans (off by default
-      // since 3.0 because it lists files at planning time). Bucketing.
-      // writeBucketed repartitions onto the bucket ids so every bucket is
-      // exactly ONE file — the layout this conf needs — and the payoff is
-      // the j8/d20 co-located joins dropping their residual per-bucket
-      // Sorts: the store side of an incremental-dedup join then runs
-      // scan→join with no Exchange AND no Sort.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Static conf, defaults to 100: a long-running engine serving ~100
-      // distinct plan shapes thrashes the generated-class cache at the
-      // default, re-paying Janino compilation (seconds per query) on every
-      // execution. Sized for the full declared surface with headroom.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // Keep the ContextCleaner draining during long many-query sessions
-      // (broadcast/shuffle state is reclaimed only after a GC notices the
-      // weak refs; the 30min default never fires in a test/audit sweep).
-      // 10min here — a periodic System.gc() is a stop-the-world pause, so
-      // the shared session stays mild; the sweep mains (Bench/Verify) run
-      // the aggressive 2min interval where the accumulation actually is.
-      .config("spark.cleaner.periodicGC.interval", "10min")
+    confs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
-    graft.ops.AsOf.install(spark)
-    spark
+    prepare(spark)
   }
 
-  /** Apply graft conf + function registry to an externally-created session
-    * (the driver's Verify/Bench sessions). Idempotent.
+  /** Apply graft's runtime SQL confs, function table and as-of planner to
+    * a session (one [[local]] built, or one built elsewhere).
+    * Idempotent.
     */
   def prepare(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    // see local(): one-file-per-bucket layout → sorted bucketed scans
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    confs.foreach { case (k, v) => if (spark.conf.isModifiable(k)) spark.conf.set(k, v) }
     Functions.registerAll(spark)
     graft.ops.AsOf.install(spark)
     spark

@@ -3,11 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression, Literal, Multiply, UnixMicros}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.GraftBridge
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.functions.{col, unix_micros, when}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
-import graft.plans.{AsOfJoin, AsOfJoinStrategy, PushFilterThroughAsOfJoin}
+import graft.plans.{AsOfJoin, AsOfJoinStrategy, PushFilterThroughAsOfJoin, RewriteAsOfMarkerJoin}
 
 /** User-facing as-of join (pandas `merge_asof` semantics, backward
   * direction): every left row gains the right row with equal `on` keys and
@@ -23,13 +25,19 @@ import graft.plans.{AsOfJoin, AsOfJoinStrategy, PushFilterThroughAsOfJoin}
   */
 object AsOf {
 
-  /** Install the as-of planner strategy + optimizer rule into a session.
-    * Idempotent; `Session.prepare`/`Session.local` call it, as does
-    * `GraftExtensions` via `spark.sql.extensions`.
+  /** The as-of planner strategy and its optimizer rules (marker rewrite,
+    * filter pushdown), listed once: [[install]] and
+    * `graft.engine.GraftExtensions` both read them.
+    */
+  val strategy: SparkStrategy = AsOfJoinStrategy
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(RewriteAsOfMarkerJoin, PushFilterThroughAsOfJoin)
+
+  /** Install [[strategy]] and [[rules]] into a session. Idempotent;
+    * `Session.prepare` calls it.
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.install(spark, AsOfJoinStrategy,
-      Seq(graft.plans.RewriteAsOfMarkerJoin, PushFilterThroughAsOfJoin))
+    GraftBridge.install(spark, strategy, rules)
 
   def joinBackward(
       left: DataFrame,

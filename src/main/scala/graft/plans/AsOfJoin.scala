@@ -17,8 +17,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   *
   * Whole-operator stack per the extension preference order: this LogicalPlan
   * + [[PushFilterThroughAsOfJoin]] (Rule[LogicalPlan]) + [[AsOfJoinStrategy]]
-  * (SparkStrategy) + [[AsOfJoinExec]] (SparkPlan), installed either via
-  * `GraftExtensions` (spark.sql.extensions) or `Session.prepare`.
+  * (SparkStrategy) + [[AsOfJoinExec]] (SparkPlan). The strategy and rules
+  * are listed once, in `graft.ops.AsOf`; `GraftExtensions`
+  * (spark.sql.extensions) and `Session.prepare` both install that list.
   *
   * `rightTiebreak` columns break equal-`rightTime` ties deterministically
   * (the physical sort appends them; the merge keeps the last match in sort

@@ -38,9 +38,10 @@ case class GraftAsOfCond(children: Seq[Expression], forward: Boolean)
 
 /** Optimizer rule: JOIN ... ON <equi-keys> AND graft_asof(lt, rt[, tol])
   * becomes [[AsOfJoin]]. LEFT OUTER keeps as-of's native left-outer
-  * semantics; INNER adds a match filter. Runs in extraOptimizations, after
-  * the main batches — the marker references both sides, so no earlier rule
-  * can push it out of the join condition.
+  * semantics; INNER adds a match filter. Runs in extraOptimizations after
+  * the main batches (`Session.prepare`) or inside the operator batch
+  * (`GraftExtensions`) — the marker references both sides, so no other
+  * rule can push it out of the join condition first.
   */
 object RewriteAsOfMarkerJoin extends Rule[LogicalPlan] {
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -96,8 +97,13 @@ object RewriteAsOfMarkerJoin extends Rule[LogicalPlan] {
         case LeftOuter => aj
         case Inner =>
           // Matched rows carry the (non-null) right key / time; unmatched
-          // left rows carry nulls across the whole right output.
-          Filter(IsNotNull(rk.headOption.getOrElse(rt)), aj)
+          // left rows carry nulls across the whole right output. Reference
+          // the key as the join outputs it (nullable): a non-nullable
+          // reference lets null propagation fold the filter to true when
+          // this rule runs inside the operator batch (GraftExtensions).
+          Filter(IsNotNull(rk.headOption.getOrElse(rt).transform {
+            case a: AttributeReference => a.withNullability(true)
+          }), aj)
         case other => throw new IllegalArgumentException(
           s"as-of SQL join supports INNER and LEFT OUTER, got $other")
       }

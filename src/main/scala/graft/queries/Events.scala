@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.Session
 import graft.ops.EventWindows
 import Tables.{t, events => eventsT}
 
@@ -22,7 +21,6 @@ object Events {
     * ts canonicalization.
     */
   private def rawEventStream(s: SparkSession, dir: String): DataFrame = {
-    Session.prepare(s)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Layout-aware (file vs replica directory) stream; schema probed from
     // the batch footer, then the same ts canonicalization as Tables.events.

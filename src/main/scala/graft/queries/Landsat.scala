@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.engine.Session
 import graft.functions.Hashing
 import graft.io.Sources
 import graft.ops.{Augment, Calibration, Features, Multimodal, Split}
@@ -18,8 +17,6 @@ object Landsat {
   type Q = (SparkSession, String) => DataFrame
 
   // ---- shared Spark-side builders ----------------------------------------
-
-  private def fx(spark: SparkSession): SparkSession = Session.prepare(spark)
 
   private def scenesDf(s: SparkSession) =
     Sources.scenes(s, s"$FixturesDir/scenes/scenes.jsonl")
@@ -88,19 +85,19 @@ object Landsat {
   val queries: Map[String, Q] = Map(
 
     // S1+P1: ground-truth CSV scan + derived date columns.
-    "s1_csv_scan" -> ((s, _) => gtDf(fx(s))),
+    "s1_csv_scan" -> ((s, _) => gtDf(s)),
 
     // S2+S4: glob scan of station-list text files + bracket/split/cast parse,
     // exploded positionally (also G1's posexplode shape).
     "s4_text_scan" -> ((s, _) =>
-      Features.explodeSamples(stationListsDf(fx(s)))
+      Features.explodeSamples(stationListsDf(s))
         .select(col("scene_id"), col("station_pos").cast("int").as("station_pos"),
           col("station_id"))),
 
     // S3+F3+F8: nested multiline JSON metadata scan; sci-notation string →
     // double casts; nested struct field access.
     "s3_json_metadata" -> ((s, _) =>
-      metadataDf(fx(s)).select(
+      metadataDf(s).select(
         col("scene_id"),
         col(s"$meta.IMAGE_ATTRIBUTES.SPACECRAFT_ID").as("craft"),
         resc.getField("RADIANCE_MULT_BAND_1").cast("double").as("mult1"),
@@ -109,14 +106,14 @@ object Landsat {
 
     // S6: 3-way inner-join alignment; missing metadata drops the scene.
     "s6_align_join" -> ((s, _) =>
-      Sources.alignScenes(scenesDf(fx(s)), stationListsDf(s), metadataDf(s))
+      Sources.alignScenes(scenesDf(s), stationListsDf(s), metadataDf(s))
         .select(col("scene_id"), size(col("bands")).as("nbands"),
           size(col("stations")).as("n_stations"),
           col(s"$meta.IMAGE_ATTRIBUTES.SPACECRAFT_ID").as("craft"))),
 
     // S5: binary blob scan (ingest edge for tensors / multimodal).
     "s5_binary_scan" -> ((s, _) =>
-      Sources.binaryBlobs(fx(s), s"$FixturesDir/binary")
+      Sources.binaryBlobs(s, s"$FixturesDir/binary")
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("name"),
           col("length"))),
 
@@ -124,7 +121,7 @@ object Landsat {
     // storage, pure JVM) with the reference's permute(1,0,2,3); checksums
     // verified against the generator's sidecar expectations.
     "s5b_pt_ingest" -> ((s, _) => {
-      val df = graft.io.TorchTensors.ingest(fx(s), s"$FixturesDir/tensors")
+      val df = graft.io.TorchTensors.ingest(s, s"$FixturesDir/tensors")
       val flat = flatten(flatten(col("tensor")))
       df.select(col("scene_id"),
         size(element_at(col("tensor"), 1)).as("nbands"),
@@ -137,7 +134,7 @@ object Landsat {
     // decode as s5b but with V2 column pruning into the reader and
     // size-packed input partitions. Same oracle (the sidecar expectations).
     "s5c_pt_datasource" -> ((s, _) => {
-      val df = fx(s).read.format("graft-pt").load(s"$FixturesDir/tensors")
+      val df = s.read.format("graft-pt").load(s"$FixturesDir/tensors")
       val flat = flatten(flatten(col("tensor")))
       df.select(col("scene_id"),
         size(element_at(col("tensor"), 1)).as("nbands"),
@@ -152,7 +149,7 @@ object Landsat {
     // to a memory sink; same projection and oracle as s5b/s5c, so the
     // streaming scan must reproduce the batch decode bit-for-bit.
     "s5d_pt_stream" -> ((s, _) => {
-      val df = fx(s).readStream.format("graft-pt").load(s"$FixturesDir/tensors")
+      val df = s.readStream.format("graft-pt").load(s"$FixturesDir/tensors")
       val flat = flatten(flatten(col("tensor")))
       val proj = df.select(col("scene_id"),
         size(element_at(col("tensor"), 1)).as("nbands"),
@@ -320,23 +317,23 @@ object Landsat {
 
     // P2+F1: scene-id split/substring/cast date parse.
     "p2_scene_date" -> ((s, _) => {
-      Features.withSceneDate(scenesDf(fx(s)).select("scene_id"))
+      Features.withSceneDate(scenesDf(s).select("scene_id"))
     }),
 
     // J1 (+P6 conjunctive keys, A4 first-match, G1 explode): GT left join
     // with first-match dedup and −9999 fill.
     "j1_gt_join" -> ((s, _) =>
-      gtJoined(fx(s)).select("scene_id", "station_id", "air_temp")),
+      gtJoined(s).select("scene_id", "station_id", "air_temp")),
 
     // P3+A2: sentinel filter then per-scene stats.
     "p3_sentinel_filter" -> ((s, _) =>
-      Features.dropSentinel(gtJoined(fx(s)))
+      Features.dropSentinel(gtJoined(s))
         .groupBy("scene_id")
         .agg(count(lit(1)).as("n"), round(avg("air_temp"), 4).as("mean_temp"))),
 
     // P4+M6: band-count validation + type tag.
     "p4_band_filter" -> ((s, _) =>
-      scenesDf(fx(s))
+      scenesDf(s)
         .filter(Calibration.validBandCount(col("bands")))
         .select(col("scene_id"), size(col("bands")).as("nbands"),
           Calibration.isLandsat5(col("bands")).as("is_l5"))),
@@ -361,7 +358,7 @@ object Landsat {
 
     // M1–M4 nested: full per-scene calibration over the band tensor.
     "m4_calibrated" -> ((s, _) =>
-      calibrated(fx(s)).select(
+      calibrated(s).select(
         col("scene_id"), col("is_l5"),
         size(col("bands7")).as("nbands7"),
         round(arrSum(flatten(col("bands7"))), 4).as("px_sum"),
@@ -370,7 +367,7 @@ object Landsat {
     // M5: 365-wide feature assembly (pixels ++ coeffs ++ [K2,K1] ++ flag ++
     // geo/temporal) over the full sample pipeline (G1+J1+J2+P2+P3).
     "m5_assembly" -> ((s, _) => {
-      val cal = calibrated(fx(s))
+      val cal = calibrated(s)
         .withColumn("mult7", Calibration.gatherCoeffs(col("mult"), col("is_l5")))
         .withColumn("add7", Calibration.gatherCoeffs(col("add"), col("is_l5")))
         .select("scene_id", "bands7", "mult7", "add7", "k1", "k2", "is_l5")
@@ -390,7 +387,7 @@ object Landsat {
     // G3: rot90 as a pure index-permutation expression, k ∈ 0..3 over the
     // first band; order-sensitive checksum proves the permutation.
     "g3_rot90" -> ((s, _) => {
-      val base = scenesDf(fx(s))
+      val base = scenesDf(s)
         .select(col("scene_id"), element_at(col("bands"), 1).as("img"))
         .select(col("*"), explode(array((0 to 3).map(lit(_)): _*)).as("k"))
       base.withColumn("rimg",
@@ -406,7 +403,7 @@ object Landsat {
     // G2+F6+F7: 4× augmentation fan-out with LCG date jitter and geodesic
     // coordinate shift (closed-form WGS84 meters-per-degree).
     "g2_augment" -> ((s, _) => {
-      val base = catalogDf(fx(s))
+      val base = catalogDf(s)
         .withColumn("year", lit(2006)).withColumn("month", lit(7))
         .withColumn("day", lit(15))
       Augment.fanOutGeo(base, "id", seed = 42L)
@@ -461,7 +458,7 @@ object Landsat {
 
     // F5: string concat / format.
     "f5_concat" -> ((s, _) =>
-      scenesDf(fx(s)).select(col("scene_id"),
+      scenesDf(s).select(col("scene_id"),
         concat(col("scene_id"), lit("_stations.txt")).as("station_file"),
         format_string("scene=%s|bands=%d", col("scene_id"),
           size(col("bands")).cast("long")).as("tag"))),
@@ -469,7 +466,7 @@ object Landsat {
     // G2 full form: tensor fan-out 1→4 — rot90 on all 7 gathered bands plus
     // LCG-jittered date/coords, per-variant streams keyed by polyhash(scene).
     "g4_augment_tensor" -> ((s, _) => {
-      val base = Features.withSceneDate(calibrated(fx(s))
+      val base = Features.withSceneDate(calibrated(s)
           .select("scene_id", "bands7"))
         .withColumn("longitude", lit(34.5)).withColumn("latitude", lit(31.2))
         .withColumn("key", Hashing.polyHash(col("scene_id")))
@@ -489,7 +486,7 @@ object Landsat {
     // (decoded for real) so both dispatch outcomes are hash-gated.
     "mm1_multimodal_ingest" -> ((s, _) => {
       val ingested = Multimodal.ingest(
-        Multimodal.scanBlobs(fx(s), s"$FixturesDir/binary",
+        Multimodal.scanBlobs(s, s"$FixturesDir/binary",
           s"$FixturesDir/images"), partitions = 4, w = 4, h = 3)
       ingested.select(col("name"), col("length"), col("modality"),
         col("quarantined"),
@@ -506,7 +503,7 @@ object Landsat {
     // pipeline reports.
     "mm5_quarantine_count" -> ((s, _) => {
       val ingested = Multimodal.ingest(
-        Multimodal.scanBlobs(fx(s), s"$FixturesDir/binary",
+        Multimodal.scanBlobs(s, s"$FixturesDir/binary",
           s"$FixturesDir/images", s"$FixturesDir/audio",
           s"$FixturesDir/video"), partitions = 4, w = 4, h = 3)
       Multimodal.quarantineCounts(ingested)
@@ -528,7 +525,7 @@ object Landsat {
     // no shared band, pinning the banded-recall boundary honestly.
     "mm6_image_phash" -> ((s, _) => {
       val imgs = Multimodal.ingestImages(
-        Multimodal.scanBlobs(fx(s), s"$FixturesDir/images_grad"),
+        Multimodal.scanBlobs(s, s"$FixturesDir/images_grad"),
         w = 9, h = 8, partitions = 2)
         .withColumn("phash", Multimodal.dHash64(col("features"), 9, 8))
       Multimodal.phashPairs(imgs, "phash", "name", maxHamming = 16)
@@ -538,7 +535,7 @@ object Landsat {
 
     "mm2_image_decode" -> ((s, _) => {
       val ingested = Multimodal.ingestImages(
-        Multimodal.scanBlobs(fx(s), s"$FixturesDir/images"), w = 4, h = 3,
+        Multimodal.scanBlobs(s, s"$FixturesDir/images"), w = 4, h = 3,
         partitions = 2)
       ingested.select(col("name"), col("length"),
         size(col("features")).as("n_features"),
@@ -558,7 +555,7 @@ object Landsat {
     // the null path.
     "mm3_audio_decode" -> ((s, _) => {
       val ingested = Multimodal.ingestAudio(
-        Multimodal.scanBlobs(fx(s), s"$FixturesDir/audio"), partitions = 2)
+        Multimodal.scanBlobs(s, s"$FixturesDir/audio"), partitions = 2)
       ingested.filter(col("features").isNotNull)
         .select(col("name"), col("length"),
           size(col("features")).as("n_samples"),
@@ -578,7 +575,7 @@ object Landsat {
     // the hashes diverge. corrupt.gif exercises the null path.
     "mm4_video_frames" -> ((s, _) => {
       val ingested = Multimodal.ingestVideo(
-        Multimodal.scanBlobs(fx(s), s"$FixturesDir/video"), everyK = 2,
+        Multimodal.scanBlobs(s, s"$FixturesDir/video"), everyK = 2,
         partitions = 2)
       ingested.filter(col("decoded").isNotNull)
         .select(col("name"), col("length"),
@@ -592,7 +589,7 @@ object Landsat {
     // J3: positional zip-join — bands zipped with the 11-wide coefficient
     // array by position (arrays_zip + posexplode; zip pads to the longer).
     "j3_zip_join" -> ((s, _) => {
-      val joined = scenesDf(fx(s)).join(metadataDf(s), Seq("scene_id"), "inner")
+      val joined = scenesDf(s).join(metadataDf(s), Seq("scene_id"), "inner")
         .withColumn("mult11", Calibration.coeffArray(resc, "RADIANCE_MULT", 11))
       joined
         .select(col("scene_id"),
@@ -607,7 +604,7 @@ object Landsat {
     // Oracle checks the pipeline invariants: |train| = ⌊0.8N⌋ fanned ×4,
     // |test| = N − ⌊0.8N⌋ unfanned, and feature width 365 throughout.
     "pipeline_e2e" -> ((s, _) =>
-      graft.Pipeline.trainTest(fx(s), graft.Pipeline.Config(fixturesDir = FixturesDir))
+      graft.Pipeline.trainTest(s, graft.Pipeline.Config(fixturesDir = FixturesDir))
         .groupBy(col("is_train"), col("aug_k").cast("int").as("aug_k"))
         .agg(count(lit(1)).as("n"),
           max(size(col("features"))).as("width"),
@@ -615,7 +612,7 @@ object Landsat {
 
     // Flagship relational core, also the driver's smoke entry: mean air temp
     // per station over Landsat-5 scenes (scan→align→explode→J1→J2→P3→agg).
-    "flagship_station_mean" -> ((s, _) => flagship(fx(s)))
+    "flagship_station_mean" -> ((s, _) => flagship(s))
   )
 
   def flagship(s: SparkSession): DataFrame = {

@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.Session
-
 /** Shared helpers for the declared query surface (SparkEntry.queries). */
 object Tables {
   /** Fixture inputs mirroring the reference's source formats (tools/gen_fixtures.py). */
@@ -38,10 +36,8 @@ object Tables {
     dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_") + "_" + digest
   }
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    Session.prepare(spark)
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Layout-aware STREAMING reader for `<name>.parquet`. The driver
     * testdata ships each table as a single FILE — a bare file path fails
@@ -54,7 +50,6 @@ object Tables {
     */
   def streamT(spark: SparkSession, dir: String, name: String,
       schema: String = null): DataFrame = {
-    Session.prepare(spark)
     val tbl = new java.io.File(dir, s"$name.parquet")
     val r = Option(schema) match {
       case Some(s) => spark.readStream.schema(s)
@@ -75,7 +70,6 @@ object Tables {
     * bit-for-bit regardless of generation).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    Session.prepare(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
   }

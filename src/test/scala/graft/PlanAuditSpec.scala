@@ -176,11 +176,17 @@ class PlanAuditSpec extends AnyFunSuite {
                       // gate adds no row-level lambda
   )
 
+  // One plan pass over the whole surface, shared by both tests: building
+  // every query's plan is the expensive part.
+  private lazy val plans: Seq[(String, String)] =
+    SparkEntry.select(Nil).map { case (name, fn) =>
+      name -> fn(spark, dir).queryExecution.executedPlan.toString
+    }
+
   test("corpus-scale plans contain no interpreted per-element lambdas") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
+    val offenders = plans
       .filterNot(q => allowedInterpreted(q._1))
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
+      .flatMap { case (name, plan) =>
         PlanAudit.interpretedLambdaProjects(plan).headOption
           .map(l => s"$name: $l")
       }
@@ -189,9 +195,8 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("nested-loop joins only appear as documented bounded broadcasts") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
+    val offenders = plans.flatMap {
+      case (name, plan) =>
         val bnlj = plan.linesIterator
           .count(_.contains("BroadcastNestedLoopJoin"))
         val cart = plan.linesIterator.count(_.contains("CartesianProduct"))

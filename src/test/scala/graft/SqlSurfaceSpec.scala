@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The registered function surface through plain `spark.sql` — what a user
-  * gets from `spark.sql.extensions=graft.engine.GraftExtensions` (same
-  * builders; Session.prepare registers them on this session).
+/** The registered function surface through plain `spark.sql`, on the
+  * session it is handed: the shared `Session.local` one here, an
+  * extensions-only one in [[ExtensionsOnlySpec]].
   */
-class SqlSurfaceSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class SqlSurfaceSpec(session: => SparkSession) extends AnyFunSuite {
+  def this() = this(TestSpark.spark)
+  protected lazy val spark: SparkSession = session
 
   test("scalar expressions are callable from SQL") {
     val r = spark.sql(

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeChunkedCrossover {
   def main(args: Array[String]): Unit = {
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     // 32 keys is enough to saturate local[32]'s per-key parallelism; the
     // unchunked side's O(d^2) interpreted-HOF fold is the thing being
     // measured, so keep the key count small or the probe takes an hour.
